@@ -97,7 +97,7 @@ def sliding_window_avg(
 def sessionize_stateful(
     stream: DataFrame,
     gap_minutes: int = 30,
-    use_timeout: bool = True,
+    use_timeout: bool = False,
     timeout_ms: int = 60_000,
 ) -> DataFrame:
     """Custom stateful sessionizer via applyInPandasWithState: per user,
@@ -107,13 +107,13 @@ def sessionize_stateful(
     to the next event exceeds ``gap_minutes`` or (with ``use_timeout``)
     the processing-time timeout flushes it.
 
-    ``use_timeout=False`` disables the timeout machinery entirely
+    By default (``use_timeout=False``) the timeout machinery is off
     (GroupStateTimeout.NoTimeout): only in-batch closed sessions are
-    emitted and an availableNow drain terminates deterministically —
-    required for the correctness gate, because with ProcessingTimeTimeout
-    an availableNow query loops 'no new data but cleaning up state'
-    batches indefinitely and emits timing-dependent rows (observed on
-    Spark 4.1: 99 cleanup batches, never terminating).
+    emitted and an availableNow drain terminates deterministically.
+    ``use_timeout=True`` selects ProcessingTimeTimeout, which must not be
+    drained with availableNow: such a query loops 'no new data but
+    cleaning up state' batches indefinitely and emits timing-dependent
+    rows (observed on Spark 4.1: 99 cleanup batches, never terminating).
 
     The timeout path IS testable, just not under availableNow: with a
     processing-time trigger the engine keeps running (empty) batches while

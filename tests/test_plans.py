@@ -158,184 +158,6 @@ def test_unigram_logprob_join_unhinted_and_never_shuffles_text(spark, sf_dir):
     assert "text" not in plans.shuffled_columns(df)
 
 
-def test_driver_window_invariants():
-    # The driver correctness-checks the first 50 registered queries; the
-    # rotation policy requires (a) exactly 50 window slots, (b) every
-    # bench HEADLINE query inside the window (a benched time without a
-    # same-round correctness row is not a result), (c) oracles for every
-    # registered query.
-    from bench import HEADLINE
-    from hadoop_gpu_spark.queries import ORACLES, QUERIES, _DRIVER_WINDOW
-
-    assert len(_DRIVER_WINDOW) == 50
-    window = list(QUERIES)[:50]
-    assert window == _DRIVER_WINDOW
-    # r14 policy change (r13 VERDICT #1): HEADLINE queries are no longer
-    # auto-windowed every round — they rotate on the standard 4-round
-    # freshness cadence, and test_changed_queries_are_windowed already
-    # forces any changed member back in the same round. HEADLINE must
-    # still be registered queries (benched ≠ unproven):
-    missing = [q for q in HEADLINE if q not in QUERIES]
-    assert not missing, f"HEADLINE not registered: {missing}"
-    assert set(ORACLES) == set(QUERIES)
-
-
-def test_changed_queries_are_windowed():
-    # Mechanized rotation-policy category (b): a query whose implementation
-    # changed since its last driver-green row — detected by comparing its
-    # source-closure fingerprint against the checked-in last-green manifest
-    # — MUST be inside the driver window, or its new behavior never touches
-    # the hard signal (this exact failure happened in round 2: the
-    # band_hashes rewrite left q_dedup_minhash_pairs / q_dedup_ngram_jaccard
-    # outside the window with stale green rows). New queries (absent from
-    # the manifest) must be windowed for the same reason. Refresh the
-    # manifest after each round's CORRECTNESS lands:
-    #   python -m hadoop_gpu_spark.fingerprint refresh CORRECTNESS_rNN.json
-    import json
-
-    from hadoop_gpu_spark.fingerprint import all_fingerprints, manifest_path
-    from hadoop_gpu_spark.queries import QUERIES, _DRIVER_WINDOW
-
-    from hadoop_gpu_spark.fingerprint import epoch_changed_queries
-
-    with open(manifest_path()) as f:
-        manifest = json.load(f)
-    fps = all_fingerprints()
-    # Data-epoch guard (round-3 incident class): a testdata regeneration
-    # invalidates greens with zero code-fingerprint signal, so queries
-    # touching a drifted table count as changed too.
-    epoch_changed = set(epoch_changed_queries(manifest))
-    offenders = [
-        n for n in QUERIES
-        if (manifest.get(n) != fps[n] or n in epoch_changed)
-        and n not in _DRIVER_WINDOW
-    ]
-    assert not offenders, (
-        f"queries changed since last driver-green but outside _DRIVER_WINDOW: "
-        f"{offenders} — add them to the window (hadoop_gpu_spark/queries.py) "
-        f"or, if they are in the latest CORRECTNESS file, refresh the manifest; "
-        f"if the cause is a test-data regeneration (epoch-changed: "
-        f"{sorted(epoch_changed)[:8]}…), re-verify locally, re-window, then "
-        f"`python -m hadoop_gpu_spark.fingerprint epoch`"
-    )
-
-
-def test_sweep_pins_are_one_round_bridges():
-    # r14 ADVICE: a sweep-sourced manifest refresh (__refresh__ pins)
-    # must not become STANDING evidence that keeps a changed query out
-    # of the driver window indefinitely — in r14 five HEADLINE queries
-    # drifted (shared-utility memoization) and were re-pinned from the
-    # sf0.01 sweep, so their benched times rested on local evidence
-    # only. Rule: a sweep pin stamped in round R must sit in
-    # _DRIVER_WINDOW for round R+1 (converting to a driver row, which
-    # clears the record). If a bulk utility drift ever exceeds the
-    # window's spare slots, stagger: refresh only the subset you can
-    # window that round (refresh() accepts any filtered results file)
-    # and leave the rest's pins stale — the changed-queries invariant
-    # then forces them into the following window.
-    import json
-    import pathlib
-    import re
-
-    from hadoop_gpu_spark.fingerprint import REFRESH_KEY, manifest_path
-    from hadoop_gpu_spark.queries import _DRIVER_WINDOW
-
-    with open(manifest_path()) as f:
-        manifest = json.load(f)
-    root = pathlib.Path(__file__).parent.parent
-    rounds = [
-        int(re.search(r"r(\d+)", f.name).group(1))
-        for f in root.glob("CORRECTNESS_r*.json")
-    ]
-    upcoming = max(rounds) + 1 if rounds else 0
-    stale_bridges = sorted(
-        n for n, rec in manifest.get(REFRESH_KEY, {}).items()
-        if (rec.get("round") or 0) < upcoming and n not in _DRIVER_WINDOW
-    )
-    assert not stale_bridges, (
-        f"sweep-pinned queries whose one-round bridge expires with round "
-        f"{upcoming} are outside _DRIVER_WINDOW: {stale_bridges} — rotate "
-        "them in so the driver converts the sweep pin to a driver row"
-    )
-
-
-def test_stale_evidence_is_windowed():
-    # r14 mechanization of the 4-round freshness policy (it lived only in
-    # comments through r13, and the r13 VERDICT's registration-logjam
-    # finding was exactly a failure of hand-run window math): with the
-    # upcoming round N = latest CORRECTNESS file + 1, every registered
-    # query whose latest driver-green row is older than N-3 — or that has
-    # never earned one — must sit inside _DRIVER_WINDOW.
-    import json
-    import pathlib
-    import re
-
-    from hadoop_gpu_spark.queries import QUERIES, _DRIVER_WINDOW
-
-    root = pathlib.Path(__file__).parent.parent
-    latest: dict[str, int] = {}
-    rounds = []
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        rno = int(re.search(r"r(\d+)", f.name).group(1))
-        rounds.append(rno)
-        for n, row in json.loads(f.read_text()).items():
-            if (
-                not row.get("err")
-                and row.get("rows_match")
-                and row.get("schema_match", True)
-                and row.get("hash_match", True)
-            ):
-                latest[n] = max(latest.get(n, 0), rno)
-    assert rounds, "no CORRECTNESS files — nothing to check"
-    upcoming = max(rounds) + 1
-    stale = [
-        n for n in QUERIES
-        if latest.get(n, -1) < upcoming - 3 and n not in _DRIVER_WINDOW
-    ]
-    assert not stale, (
-        f"stale-evidence queries outside the driver window (latest green "
-        f"older than round {upcoming - 3}, upcoming round {upcoming}): "
-        f"{[(n, latest.get(n)) for n in stale]} — rotate them in"
-    )
-
-
-def test_data_epoch_guard_detects_drift():
-    # The guard that the round-3 incident (events TIMESTAMP(NANOS) →
-    # timestamp[us] regeneration) would have tripped: perturb the pinned
-    # epoch hash for one table and every query touching it must report
-    # as changed.
-    import json
-
-    from hadoop_gpu_spark.fingerprint import (
-        DATA_EPOCH_KEY,
-        data_epoch,
-        epoch_changed_queries,
-        manifest_path,
-        query_tables,
-    )
-
-    with open(manifest_path()) as f:
-        manifest = json.load(f)
-    # the checked-in manifest must pin the current on-disk epoch
-    assert manifest.get(DATA_EPOCH_KEY) == data_epoch(), (
-        "test data changed since the manifest pinned it — re-verify affected "
-        "queries, re-window them, then `python -m hadoop_gpu_spark.fingerprint epoch`"
-    )
-    # synthetic drift: events regenerated
-    fake = dict(manifest)
-    fake[DATA_EPOCH_KEY] = dict(fake[DATA_EPOCH_KEY], events="0" * 16)
-    changed = set(epoch_changed_queries(fake))
-    assert "q_events_hourly" in changed and "q_sessionization" in changed
-    assert "q01_pricing_summary" not in changed  # lineitem-only query untouched
-    # a table DELETED from disk must flag too (pinned-only entries drift)
-    fake2 = dict(manifest)
-    fake2[DATA_EPOCH_KEY] = dict(fake2[DATA_EPOCH_KEY], ghost_table="f" * 16)
-    assert epoch_changed_queries(fake2) is not None  # no crash on unknown table
-    # static table tracer sanity
-    assert "events" in query_tables("q_events_hourly")
-    assert "lineitem" in query_tables("q01_pricing_summary")
-
-
 def test_lsh_ann_corpus_vectors_never_shuffle(spark, sf_dir):
     # The q_ann_lsh scale claim, pinned: corpus embeddings (__cv) are
     # consumed at the scan side of the broadcast join — only the tiny
@@ -367,260 +189,6 @@ def test_lsh_bucketed_corpus_probe_prunes_partitions(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan and "sig" in plan
     bucket_n = probe.count()
     assert 0 < bucket_n < emb.count()
-
-
-def test_fingerprints_independent_of_import_order():
-    # The r04 flake: a query's closure silently grew when an unrelated
-    # test imported a lazily-loaded submodule (multimodal.png), flipping
-    # its fingerprint mid-suite. _collect must import submodules itself so
-    # the closure — and thus the manifest check — is deterministic.
-    from hadoop_gpu_spark.fingerprint import _collect, query_fingerprint
-
-    seen: dict[str, str] = {}
-    _collect(QUERIES["q_multimodal_decode"], seen)
-    assert any(k.startswith("hadoop_gpu_spark.multimodal.png") for k in seen), (
-        "lazy submodule multimodal.png missing from closure — fingerprints "
-        "would depend on process import order"
-    )
-    fp1 = query_fingerprint("q_multimodal_decode")
-    import hadoop_gpu_spark.multimodal.png  # noqa: F401
-
-    assert query_fingerprint("q_multimodal_decode") == fp1
-
-
-def test_fingerprint_module_attr_is_function_precise():
-    # r10 precision fix: a `join_ops.broadcast_join(...)` call site hashes
-    # exactly the referenced function (transitively), NOT the whole joins
-    # module — before this, a one-function edit (the asof_join struct-fill
-    # fix) flipped 8 queries, 5 of them join_ops users whose closures never
-    # reach asof_join, overflowing the driver window's spare slots with
-    # provably-unchanged queries.
-    from hadoop_gpu_spark.fingerprint import _collect
-
-    seen: dict[str, str] = {}
-    _collect(QUERIES["q_join_broadcast"], seen)
-    assert "hadoop_gpu_spark.operators.joins.broadcast_join" in seen
-    assert "hadoop_gpu_spark.operators.joins" not in seen, (
-        "whole joins module hashed for a single-function reference — the "
-        "module-coupling the r10 precision fix removed"
-    )
-    assert not any(".asof_join" in k for k in seen), seen.keys()
-
-
-def _refs_module_constant():
-    # fixture for the constant-fallback test below — a module-level
-    # constant reference has no function source to hash
-    from hadoop_gpu_spark import fingerprint as fp_mod
-
-    return fp_mod.DATA_EPOCH_KEY
-
-
-def test_fingerprint_module_constant_falls_back_to_module_hash():
-    # The precision fix must stay CONSERVATIVE for `mod.CONSTANT`: there is
-    # no function source to hash, so the whole module is hashed — a
-    # constant edit still flips every consumer's fingerprint.
-    from hadoop_gpu_spark.fingerprint import _collect
-
-    seen: dict[str, str] = {}
-    _collect(_refs_module_constant, seen)
-    assert "hadoop_gpu_spark.fingerprint" in seen, (
-        "module-level constant reference escaped the fingerprint closure"
-    )
-
-
-def test_fingerprint_sees_bare_name_constants(monkeypatch):
-    # r12 fix (r11 VERDICT #4 / ADVICE r11): a constant consumed by BARE
-    # name inside a traced function (tokenize's TOKEN_SPLIT_RE default,
-    # bm25_topk's _DL_RE) resolved to a plain value and fell through both
-    # _collect branches — editing it changed behavior without flipping
-    # any consumer fingerprint. The closure now hashes a stable repr of
-    # the value, so the edit flips every consumer.
-    from hadoop_gpu_spark import fingerprint as fp
-    from hadoop_gpu_spark.operators import fields
-
-    seen: dict[str, str] = {}
-    fp._collect(QUERIES["q_wordcount"], seen)
-    key = "hadoop_gpu_spark.operators.fields.$TOKEN_SPLIT_RE"
-    assert key in seen and seen[key] == repr(fields.TOKEN_SPLIT_RE), sorted(
-        k for k in seen if "$" in k
-    )
-
-    fp1 = fp.query_fingerprint("q_wordcount")
-    monkeypatch.setattr(fields, "TOKEN_SPLIT_RE", r"[,;]+")
-    assert fp.query_fingerprint("q_wordcount") != fp1, (
-        "bare-name constant edit did not flip the consumer fingerprint"
-    )
-
-    # Scope guards: the hashing is limited to ALL_CAPS conventional
-    # constants (mutable lowercase module state like tables._schema_cache
-    # would make fingerprints depend on which tables the process already
-    # loaded) and excludes the registration registries (hashing ORACLES
-    # would couple every query's fingerprint to every OTHER query's
-    # oracle — registering one new gate flipped all 128 when this
-    # landed unscoped).
-    assert not any("_schema_cache" in k for k in seen), sorted(
-        k for k in seen if "$" in k
-    )
-    assert not any(k.endswith(".$ORACLES") or k.endswith(".$QUERIES") for k in seen)
-
-
-def test_fingerprint_ignores_mutable_cache_constants():
-    # r12 follow-up falsifier: bloom._BC_CACHE is an ALL_CAPS name but
-    # MUTABLE broadcast-handle state. Hashing it made the fingerprint a
-    # function of process history — empty at import it hashed as "{}",
-    # populated it fell out of _stable_repr — so running any bloom test
-    # before test_changed_queries_are_windowed flipped
-    # q_bloom_decontaminate vs the manifest (observed full-suite-order
-    # failure). Empty mutable containers are now skipped; the
-    # fingerprint must be identical before and after cache warm-up.
-    from hadoop_gpu_spark import fingerprint as fp
-    from hadoop_gpu_spark.operators import bloom
-
-    fp0 = fp.query_fingerprint("q_bloom_decontaminate")
-    key = ("test-app", "test-key")
-    bloom._BC_CACHE[key] = object()  # unstable repr, like a Broadcast
-    try:
-        assert fp.query_fingerprint("q_bloom_decontaminate") == fp0, (
-            "cache warm-up changed a query fingerprint"
-        )
-    finally:
-        bloom._BC_CACHE.pop(key, None)
-
-    seen: dict[str, str] = {}
-    fp._collect(QUERIES["q_bloom_decontaminate"], seen)
-    assert not any(k.endswith("$_BC_CACHE") for k in seen), sorted(
-        k for k in seen if "$" in k
-    )
-
-
-def test_stable_repr_rejects_unstable_and_orders_sets():
-    # The constant-hash must never inject process-flaky material: default
-    # object reprs carry id(); set iteration order varies by hash seed.
-    from hadoop_gpu_spark.fingerprint import _stable_repr
-
-    assert _stable_repr({"a": [1, 2.5, ("x", None)]}) == "{'a': [1, 2.5, ('x', None)]}"
-    assert _stable_repr({3, 1, 2}) == "set{1, 2, 3}"
-    assert _stable_repr(object()) is None
-    assert _stable_repr([1, object()]) is None
-    lst: list = [1]
-    lst.append(lst)  # self-referencing constant must terminate
-    assert _stable_repr(lst) is None
-    # dicts order by key repr like sets (r13): a dict constant built in
-    # process-dependent insertion order (comprehension over a set under
-    # hash randomization) must not make fingerprints process-flaky
-    assert _stable_repr({"b": 1, "a": 2}) == _stable_repr({"a": 2, "b": 1})
-    assert _stable_repr({"b": 1, "a": 2}) == "{'a': 2, 'b': 1}"
-
-
-def test_changed_top_defs_is_def_precise():
-    # The restamp laundering guard's git-diff primitive: only defs whose
-    # source (incl. decorators) differs from HEAD are named; module-level
-    # drift outside defs degrades to whole-file (None).
-    from hadoop_gpu_spark.fingerprint import _changed_top_defs, _git_state
-
-    _, dirty = _git_state()
-    clean = "hadoop_gpu_spark/utils.py"
-    if clean not in dirty:
-        # a committed file with no working-tree changes: no changed defs
-        assert _changed_top_defs(clean) == set()
-    # an untracked/nonexistent path degrades to whole-file suspicion
-    assert _changed_top_defs("hadoop_gpu_spark/__no_such_file__.py") is None
-
-
-def test_restamp_guard_mechanically_derives_laundered_set():
-    # laundered_queries maps dirty-file def changes onto query closures:
-    # a candidate is flagged iff its closure reaches a changed def. With
-    # an empty dirty list, nothing can be laundered.
-    from hadoop_gpu_spark.fingerprint import laundered_queries
-    from hadoop_gpu_spark.queries import QUERIES
-
-    some = list(QUERIES)[:5]
-    assert laundered_queries([], some) == []
-
-
-def test_driver_refresh_refuses_to_move_pins(tmp_path, monkeypatch):
-    # The r14 ADVICE laundering hole: replaying a driver CORRECTNESS
-    # file after in-round edits would stamp the CURRENT tree's
-    # fingerprint as driver-proven. refresh() must refuse to MOVE an
-    # existing pin from a driver-sourced file unless forced — and a
-    # forced move must leave a driver_forced audit record.
-    import json
-
-    from hadoop_gpu_spark import fingerprint as fp
-
-    manifest = tmp_path / "m.json"
-    manifest.write_text(json.dumps({"q_x": "old-fp", "q_y": "same-fp"}))
-    corr = tmp_path / "CORRECTNESS_r99.json"
-    corr.write_text(json.dumps({
-        "q_x": {"err": None, "rows_match": True, "schema_match": True, "hash_match": True},
-        "q_y": {"err": None, "rows_match": True, "schema_match": True, "hash_match": True},
-    }))
-    monkeypatch.setattr(fp, "manifest_path", lambda: str(manifest))
-    monkeypatch.setattr(fp, "all_fingerprints", lambda: {"q_x": "new-fp", "q_y": "same-fp"})
-    monkeypatch.setattr(fp, "data_epoch", lambda *a, **k: {})
-
-    with pytest.raises(RuntimeError, match="q_x"):
-        fp.refresh(str(corr))
-    # refusal left the manifest untouched
-    assert json.loads(manifest.read_text())["q_x"] == "old-fp"
-
-    fp.refresh(str(corr), force=True)
-    m = json.loads(manifest.read_text())
-    assert m["q_x"] == "new-fp"
-    assert m[fp.REFRESH_KEY]["q_x"]["driver_forced"] is True
-    # r15 ADVICE: driver files carry no "round" key — the provenance
-    # round derives from the CORRECTNESS_rNN filename, never None
-    assert m[fp.REFRESH_KEY]["q_x"]["round"] == 99
-    assert "q_y" not in m[fp.REFRESH_KEY]  # unmoved pin: clean driver pin
-
-
-def test_driver_refresh_exclude_does_not_waive_other_movers(tmp_path, monkeypatch):
-    # Excluding one moved query must not silence the guard for OTHER
-    # non-excluded movers — exclusion is per-query, not a bypass.
-    import json
-
-    from hadoop_gpu_spark import fingerprint as fp
-
-    manifest = tmp_path / "m.json"
-    manifest.write_text(json.dumps({"q_x": "old-fp", "q_y": "old-fp-y"}))
-    corr = tmp_path / "CORRECTNESS_r99.json"
-    corr.write_text(json.dumps({
-        "q_x": {"err": None, "rows_match": True, "schema_match": True, "hash_match": True},
-        "q_y": {"err": None, "rows_match": True, "schema_match": True, "hash_match": True},
-    }))
-    monkeypatch.setattr(fp, "manifest_path", lambda: str(manifest))
-    monkeypatch.setattr(fp, "all_fingerprints", lambda: {"q_x": "new-fp", "q_y": "new-fp-y"})
-    monkeypatch.setattr(fp, "data_epoch", lambda *a, **k: {})
-
-    with pytest.raises(RuntimeError, match="q_y"):
-        fp.refresh(str(corr), exclude=["q_x"])
-    assert json.loads(manifest.read_text())["q_y"] == "old-fp-y"
-
-
-def test_driver_refresh_excluded_move_does_not_refuse(tmp_path, monkeypatch):
-    # The sanctioned alternative to force (r16): exclude the moved
-    # queries — their pins stay stale (so the changed-queries invariant
-    # keeps them window-forced) while everyone else's refresh lands.
-    import json
-
-    from hadoop_gpu_spark import fingerprint as fp
-
-    manifest = tmp_path / "m.json"
-    manifest.write_text(json.dumps({"q_x": "old-fp", "q_y": "same-fp"}))
-    corr = tmp_path / "CORRECTNESS_r99.json"
-    corr.write_text(json.dumps({
-        "q_x": {"err": None, "rows_match": True, "schema_match": True, "hash_match": True},
-        "q_y": {"err": None, "rows_match": True, "schema_match": True, "hash_match": True},
-    }))
-    monkeypatch.setattr(fp, "manifest_path", lambda: str(manifest))
-    monkeypatch.setattr(fp, "all_fingerprints", lambda: {"q_x": "new-fp", "q_y": "same-fp"})
-    monkeypatch.setattr(fp, "data_epoch", lambda *a, **k: {})
-
-    fp.refresh(str(corr), exclude=["q_x"])  # the only mover is excluded
-    m = json.loads(manifest.read_text())
-    assert m["q_x"] == "old-fp"  # stale → stays window-forced
-    assert m["q_y"] == "same-fp"
-    assert fp.REFRESH_KEY not in m  # no sweep/forced records created
 
 
 def test_ensure_min_partitions_sees_through_fake_splits(spark, tmp_path):

@@ -377,6 +377,8 @@ def test_cms_precount_null_tokens_match_occurrence_form(spark):
     # weighted pre-count path and the per-occurrence path (tokenize
     # never emits nulls, so this guards the helper's own contract, not
     # a reachable production shape).
+    import pandas as pd
+
     from hadoop_gpu_spark.operators.cms import cms_build
     from hadoop_gpu_spark.streaming import _cms_precount
 
@@ -386,10 +388,14 @@ def test_cms_precount_null_tokens_match_occurrence_form(spark):
     occurrence = cms_build(toks, "tok", d=4, w=8).toPandas()
     pre = toks.mapInPandas(_cms_precount, "tok string, __c long")
     weighted = cms_build(pre, "tok", d=4, w=8, weight_col="__c").toPandas()
+    # a null token's col_id arrives as NaN, and NaN != NaN, so compare
+    # the frames NaN-aware rather than as tuples
     key = ["row_id", "col_id", "cnt"]
-    assert sorted(map(tuple, occurrence[key].values.tolist())) == sorted(
-        map(tuple, weighted[key].values.tolist())
-    )
+
+    def canon(df):
+        return df[key].sort_values(key).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(canon(occurrence), canon(weighted))
 
 
 def test_stream_cms_construct_two_scales_then_collect_first(spark, sf_dir):

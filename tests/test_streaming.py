@@ -40,7 +40,11 @@ def test_sessionize_stateful_runs(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        # the default (no timeout) must let the availableNow drain end
+        assert q.awaitTermination(120) is True
+    finally:
+        q.stop()
     out = spark.table("sess_stream").toPandas()
     # availableNow drains one batch; only sessions closed by a >gap jump
     # inside the batch are emitted — check shape + invariants, not totals.
